@@ -1,11 +1,18 @@
 """Flagship pipeline runner: discover -> normalize -> pivot -> sink -> report.
 
 Re-expresses the reference's end-to-end ``main()`` (``pivot_all_files.py:
-366-554``) as ONE Spark job:
+366-554``) as ONE Spark plan whose write is the only thing that runs on the
+cluster: the metadata phase launches no Spark job, and a run over the
+seeded 4-file trip set (``perfbench`` ``pivot_etl``) submits 2 jobs in
+total — the pivot shuffle's map stage and the write, which adaptive query
+execution submits as separate jobs:
 
 * file discovery + name filter + priority sort + max-files slice
   (reference ``pivot_all_files.py:399-409``) stay driver-side — they are
   metadata operations on a path list;
+* each file's Parquet footer is read once, driver-side with no job, and
+  shared by the schema pre-flight and the ingest, whose scans all use a
+  declared schema, so no scan infers one;
 * the per-file process fan-out, per-batch partial aggregation, intermediate
   parquet materialization, and final combine (reference §3.1 steps 6-7)
   collapse into the single-shuffle ``hourly_pivot`` plan — Spark's task
@@ -35,14 +42,16 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from taxi_data_datapipeline_spark.operators.pivot import HOUR_COLUMNS, row_total
 from taxi_data_datapipeline_spark.operators.pivot import pivot_counts
-from taxi_data_datapipeline_spark.sources.ingest import normalize_trips
+from taxi_data_datapipeline_spark.sources.ingest import footer_schemas, normalize_trips
 from taxi_data_datapipeline_spark.sources.paths import (
     discover_parquet_files,
     infer_taxi_type_from_path,
 )
+from taxi_data_datapipeline_spark.sources.schema_detect import resolve_trip_schema
 
 
 @dataclass
@@ -107,7 +116,10 @@ def select_input_files(config: PipelineConfig) -> list[str]:
 
 
 def run_schema_check(
-    spark: SparkSession, files: list[str], sample: int = 5
+    spark: SparkSession,
+    files: list[str],
+    sample: int = 5,
+    footers: dict[str, StructType | None] | None = None,
 ) -> dict[str, str | None]:
     """Advisory schema pre-flight (reference ``pivot_all_files.py:343-363``):
     resolve the first ``sample`` files' footer schemas and WARN about any
@@ -115,23 +127,20 @@ def run_schema_check(
     cluster time. Advisory ONLY — per-file detection inside
     ``normalize_trips`` remains authoritative (a warned file may still
     resolve via the first-batch sniff fallback, and an unsampled file may
-    still fail and be skip-reported).
+    still fail and be skip-reported). ``footers`` (from ``footer_schemas``)
+    reuses footers already read; otherwise the sampled footers are read.
 
     Returns {file: detected_datetime_col_or_None} for the sampled files.
     """
     import warnings
 
-    from taxi_data_datapipeline_spark.sources.ingest import _footer_schema
-    from taxi_data_datapipeline_spark.sources.schema_detect import (
-        resolve_trip_schema,
-    )
-
+    sampled = files[:sample]
+    if footers is None:
+        footers = footer_schemas(spark, sampled)
     results: dict[str, str | None] = {}
-    for f in files[:sample]:
-        try:
-            ts = resolve_trip_schema(_footer_schema(spark, f))
-        except Exception:
-            ts = None
+    for f in sampled:
+        footer = footers.get(f)
+        ts = resolve_trip_schema(footer) if footer is not None else None
         results[f] = ts.datetime_col if ts is not None else None
         if ts is None:
             warnings.warn(
@@ -254,9 +263,14 @@ def run_pivot_pipeline(
     """Execute the full pipeline; returns the observed run metrics."""
     t0 = time.time()
     files = select_input_files(config)
+    # Each footer is read once, driver-side with no Spark job, and shared
+    # by the pre-flight and the ingest.
+    footers = footer_schemas(spark, files)
     if config.schema_check:
-        run_schema_check(spark, files)
-    trips, ingest_report = normalize_trips(spark, files, typed_place=True)
+        run_schema_check(spark, files, footers=footers)
+    trips, ingest_report = normalize_trips(
+        spark, files, typed_place=True, footers=footers
+    )
     types = sorted(
         {infer_taxi_type_from_path(f) for f in ingest_report.resolved}
     )

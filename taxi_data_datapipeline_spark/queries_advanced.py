@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from taxi_data_datapipeline_spark.functions.text import bpe_ish_tokens
 from taxi_data_datapipeline_spark.operators.asof import asof_join
 from taxi_data_datapipeline_spark.queries import load, register
+from taxi_data_datapipeline_spark.sources.ingest import footer_schema
 
 # --- as-of join ---------------------------------------------------------------
 
@@ -407,9 +408,10 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP(MICROS) without UTC adjustment infers as TIMESTAMP_NTZ under
     Spark 4 and is cast to the session-zoned TIMESTAMP that watermarks
     require. Glob form: the file-stream source needs a directory basePath,
-    which it infers from the non-glob path prefix."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    which it infers from the non-glob path prefix. The schema comes from
+    the footer with no Spark job, under the session's own nanosAsLong
+    (``_stream_session`` pins it)."""
+    schema = footer_schema(spark, f"{sf_dir}/events.parquet")
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

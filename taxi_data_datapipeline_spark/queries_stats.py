@@ -21,6 +21,7 @@ from taxi_data_datapipeline_spark.functions.text import (
     quality_features,
 )
 from taxi_data_datapipeline_spark.queries import load, register
+from taxi_data_datapipeline_spark.sources.ingest import footer_schema
 
 # Same tokenizer contracts as queries_advanced / queries_data.
 _SQL_SUBTOKS = (
@@ -4278,7 +4279,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     old_buckets = build_old_buckets(
         docs.filter(F.col("doc_id") % 5 != 0)
     ).localCheckpoint(eager=True)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = footer_schema(spark, f"{sf_dir}/documents.parquet")
     new_stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

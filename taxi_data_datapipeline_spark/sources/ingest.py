@@ -6,25 +6,32 @@ Canonical trip schema (reference ``pivot_all_files.py:47-51``):
     plus path-derived audit columns file_year / file_month (nullable ints).
 
 Strategy (SURVEY §1.3): read each file's parquet *footer* schema driver-side
-(cheap, metadata only), resolve it with the fuzzy detector, group files whose
-resolution is identical, build ONE ``spark.read.parquet(*group)`` scan per
-group with a plain ``select`` projection, and ``unionByName`` the groups.
+with no Spark job (``footer_schemas``: the footer bytes through the
+session's Hadoop ``FileSystem``, converted by Spark's own
+footer-to-schema code), resolve it with the fuzzy detector, and group files
+whose resolution and declared column types are identical. Every group
+scans with ``spark.read.schema(pruned).parquet(*group)``, where ``pruned``
+holds only the detected datetime/location/lat/lon fields as the footer
+types them, so no scan infers a schema; a plain ``select`` projects each
+group onto the canonical columns and ``unionByName`` joins the groups.
 Catalyst prunes each scan to exactly the projected columns and pushes the
 null filter down; the union is a no-shuffle narrow op.
 
-This scales: for N files the driver does N footer reads (parallelizable, and
-identical-schema files collapse into one scan), while data never leaves the
-executors.
+This scales: for N files the driver does N footer reads (parallelizable,
+no job, and identical-schema files collapse into one scan), while data
+never leaves the executors.
 """
 
 from __future__ import annotations
 
+import json
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 
 from taxi_data_datapipeline_spark.functions.keys import latlon_place_key, place_key
 from taxi_data_datapipeline_spark.functions.timestamps import coerce_timestamp
@@ -45,54 +52,131 @@ class IngestReport:
     skipped: list[str]
 
 
-def _footer_schema(spark: SparkSession, path: str):
-    # Footer-only read: Spark resolves the schema without scanning data pages.
-    # nanosAsLong lets TIMESTAMP(NANOS) files (pandas/pyarrow default) resolve
-    # as bigint instead of failing analysis; coerce_timestamp's magnitude
-    # ladder then restores them to microsecond timestamps.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path).schema
+class _FooterReader:
+    """Driver-side Parquet footer -> Spark ``StructType``, with no Spark job.
+
+    ``spark.read.parquet(p).schema`` launches a one-task inference job
+    (``mergeSchemasInParallel``) per call. This reads the same footer
+    through the session's Hadoop ``FileSystem`` (so ``s3a://`` and its
+    credentials work) and converts it with Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` and a
+    ``ParquetToSparkSchemaConverter`` built from the session conf: the
+    type mapping is inference's, including nanosAsLong, TIMESTAMP_NTZ
+    inference, INT96 and the Spark row-metadata schema key. The JVM
+    handles are resolved once per reader because each py4j class lookup
+    costs a round trip per package segment."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        jvm = spark._jvm
+        state = spark._jsparkSession.sessionState()
+        sql_conf = state.conf()
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        self._hadoop_conf = state.newHadoopConf()
+        self._case_sensitive = sql_conf.caseSensitiveAnalysis()
+        self._converter = parquet.ParquetToSparkSchemaConverter(sql_conf)
+        self._read_footer = parquet.ParquetFooterReader.readFooter
+        self._to_struct = parquet.ParquetFileFormat.readSchemaFromFooter
+        self._skip_row_groups = (
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+        )
+        self._input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus
+        self._footer = jvm.org.apache.parquet.hadoop.Footer
+        self._path = jvm.org.apache.hadoop.fs.Path
+        self._check_duplicates = (
+            jvm.org.apache.spark.sql.util.SchemaUtils.checkSchemaColumnNameDuplication
+        )
+
+    def __call__(self, path: str) -> StructType:
+        jpath = self._path(path)
+        fs = jpath.getFileSystem(self._hadoop_conf)
+        status = fs.getFileStatus(jpath)
+        while status.isDirectory():
+            # A Spark-written ``x.parquet/`` directory: like inference, read
+            # one data leaf (files before subdirectories, then by name),
+            # skipping ``_SUCCESS``/``.crc``-style names.
+            named = ((c.getPath().getName(), c) for c in fs.listStatus(status.getPath()))
+            data = sorted(
+                (c.isDirectory(), n, c) for n, c in named if not n.startswith(("_", "."))
+            )
+            if not data:
+                raise FileNotFoundError(f"no Parquet data file under {path}")
+            status = data[0][2]
+        meta = self._read_footer(
+            self._input_file(status, self._hadoop_conf), self._skip_row_groups
+        )
+        jschema = self._to_struct(self._footer(status.getPath(), meta), self._converter)
+        # The analysis-time check inference runs too (COLUMN_ALREADY_EXISTS
+        # for a footer with case-duplicate names).
+        self._check_duplicates(jschema, self._case_sensitive)
+        return StructType.fromJson(json.loads(jschema.json()))
 
 
-def _sniff_first_batch(path: str):
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of one Parquet file or Spark-written directory,
+    read from its footer with no Spark job. Raises wherever
+    ``spark.read.parquet(path).schema`` would."""
+    return _FooterReader(spark)(path)
+
+
+def footer_schemas(spark: SparkSession, files: list[str]) -> dict[str, StructType | None]:
+    """``footer_schema`` for every file; None for a file whose footer
+    cannot be read or converted (corrupt, truncated, not Parquet,
+    case-duplicate names).
+
+    Footer reads are metadata-only but latency-bound (one round trip per
+    file, significant against S3 with 10^4-10^5 files), so they run on a
+    driver-side thread pool."""
+    read = _FooterReader(spark)
+
+    def safe(f: str) -> StructType | None:
+        try:
+            return read(f)
+        except Exception:
+            return None
+
+    with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as pool:
+        return dict(zip(files, pool.map(safe, files)))
+
+
+def _sniffed_scan(path: str) -> tuple[TripSchema | None, StructType | None]:
     """First-batch schema sniff — the reference's fallback when footer-only
     detection fails (``pivot_all_files.py:196-202``): open the file with the
-    SECONDARY reader (pyarrow) and read one <=1000-row batch; its schema
-    feeds the same duck-typed detector. Catches files Spark's inference
-    rejects but whose needed columns are perfectly readable — e.g. a footer
-    with case-duplicate column names (COLUMN_ALREADY_EXISTS) or an exotic
-    unrelated column. Returns the arrow schema, or None."""
+    SECONDARY reader (pyarrow), read one <=1000-row batch and feed its
+    schema to the same duck-typed detector. Catches files Spark's footer
+    conversion rejects but whose needed columns are perfectly readable —
+    e.g. a footer with case-duplicate column names (COLUMN_ALREADY_EXISTS)
+    or an exotic unrelated column. ns timestamps are declared as LongType
+    to match the session's nanosAsLong read path; coerce_timestamp's
+    magnitude ladder restores them. Returns (None, None) when nothing
+    detects."""
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_type
 
-        pf = pq.ParquetFile(path)
-        batch = next(pf.iter_batches(batch_size=1000))
-        return batch.schema
+        arrow_schema = next(pq.ParquetFile(path).iter_batches(batch_size=1000)).schema
+        ts = resolve_trip_schema(arrow_schema)
+        if ts is None:
+            return None, None
+
+        def spark_type(name: str):
+            at = arrow_schema.field(name).type
+            if pa.types.is_timestamp(at) and at.unit == "ns":
+                return LongType()
+            return from_arrow_type(at)
+
+        return ts, _pruned_schema(ts, spark_type)
     except Exception:
-        return None
+        return None, None
 
 
-def _declared_schema_for(arrow_schema, ts: TripSchema):
-    """Build a PRUNED declared Spark schema covering only the detected
-    columns, so the scan never touches whatever column broke inference
-    (landmine: a declared schema also survives footers Spark cannot infer
-    from). ns timestamps are declared as LongType to match the session's
-    nanosAsLong read path; coerce_timestamp's magnitude ladder restores
-    them."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_type
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    needed = [c for c in (ts.datetime_col, ts.location_col, ts.lat_col, ts.lon_col) if c]
-    fields = []
-    for name in needed:
-        at = arrow_schema.field(name).type
-        if pa.types.is_timestamp(at) and at.unit == "ns":
-            st = LongType()
-        else:
-            st = from_arrow_type(at)
-        fields.append(StructField(name, st))
-    return StructType(fields)
+def _pruned_schema(ts: TripSchema, type_of) -> StructType:
+    """The declared scan schema: only the detected columns, each typed as
+    the file's own footer (or sniffed batch) has it. The scan never touches
+    a column that could break inference, and files whose physical types
+    differ never share a scan."""
+    cols = (ts.datetime_col, ts.location_col, ts.lat_col, ts.lon_col)
+    return StructType([StructField(c, type_of(c)) for c in cols if c])
 
 
 def normalize_trips(
@@ -100,98 +184,57 @@ def normalize_trips(
     files: list[str],
     taxi_types: dict[str, str] | None = None,
     typed_place: bool = False,
+    footers: dict[str, StructType | None] | None = None,
 ) -> tuple[DataFrame, IngestReport]:
     """Resolve every file's schema and return one canonical trips DataFrame.
 
     ``taxi_types`` optionally overrides the per-file path inference.
-    Files with no detectable datetime column are skipped (reported, not
-    fatal) — reference behavior ``pivot_all_files.py:204-216``.
+    ``footers`` ({file: footer schema or None}, from ``footer_schemas``)
+    lets a caller that already read the footers skip a second read.
+    Files with no detectable datetime column, or whose footer cannot be
+    read and whose first batch cannot be sniffed (corrupt, truncated, not
+    parquet), are skipped (reported, not fatal) — reference behavior
+    ``pivot_all_files.py:204-216``.
 
     ``typed_place=True`` keeps location-id place keys in their NATIVE
-    numeric type instead of the canonical string: hashing/comparing a
+    integer type instead of the canonical string: hashing/comparing a
     fixed-width int in the pivot's aggregation key measures ~2.5x faster
     than the stringified form, and the pivot stringifies AFTER the
     aggregate (per output row, not per input row) so the output contract
-    is unchanged. When resolved files mix location-id and lat/lon place
-    modes the column falls back to string for union compatibility —
-    identical values either way, the type is purely an aggregation-key
-    representation choice.
+    is unchanged. Unless every resolved file has an integral location
+    column the column falls back to string: a lat/lon string key or a
+    fractional id (which would widen the union and render "7" as "7.0")
+    cannot share the native type.
     """
+    if footers is None:
+        footers = footer_schemas(spark, files)
     resolved: dict[str, TripSchema] = {}
     skipped: list[str] = []
     groups: dict[tuple, list[str]] = defaultdict(list)
-
-    # Footer reads are metadata-only but latency-bound (one round-trip per
-    # file — significant against S3 with 10^4-10^5 files). They are
-    # independent, so fetch them on a driver-side thread pool; order is
-    # restored by zipping back to `files`. A file whose footer cannot be
-    # read (corrupt, truncated, not parquet) is skipped with an error
-    # record, not a crash — reference behavior ``pivot_all_files.py:204-216``.
-    def safe_footer(f: str):
-        try:
-            return _footer_schema(spark, f)
-        except Exception:
-            return None
-
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as pool:
-        schemas = list(pool.map(safe_footer, files))
-
-    declared: dict[tuple, object] = {}
-    for f, schema in zip(files, schemas):
-        decl = None
-        if schema is None:
-            # Footer-only resolution failed: reference fallback — sniff the
-            # first <=1000-row batch with the secondary reader and, if the
-            # canonical columns detect, scan with a PRUNED declared schema
-            # (only the detected columns, so the scan never touches the
-            # column that broke inference).
-            arrow_schema = _sniff_first_batch(f)
-            ts = resolve_trip_schema(arrow_schema) if arrow_schema is not None else None
-            if ts is not None:
-                try:
-                    decl = _declared_schema_for(arrow_schema, ts)
-                except Exception:
-                    ts = None
-            schema = decl
+    for f in files:
+        footer = footers.get(f)
+        if footer is not None:
+            ts = resolve_trip_schema(footer)
+            pruned = _pruned_schema(ts, lambda c: footer[c].dataType) if ts else None
         else:
-            ts = resolve_trip_schema(schema)
+            ts, pruned = _sniffed_scan(f)
         if ts is None:
             skipped.append(f)
             continue
         resolved[f] = ts
         ttype = (taxi_types or {}).get(f) or infer_taxi_type_from_path(f)
-        ym = infer_month_from_path(f)
-        dtype = schema[ts.datetime_col].dataType
-        # Files sharing (projection recipe, taxi type, year-month) share a scan.
-        # Sniff-fallback files additionally key on the FULL declared schema
-        # (every pruned field's name+type), not just a decl-present flag:
-        # two footer-hostile files whose detected columns and datetime type
-        # match but whose location/lat/lon physical types differ must NOT
-        # share one file's declared-schema scan (last-writer-wins on
-        # ``declared[key]`` would misread or fail the other file).
-        key = (
-            ts,
-            ttype,
-            ym,
-            dtype.simpleString(),
-            decl.simpleString() if decl is not None else None,
-        )
-        groups[key].append(f)
-        if decl is not None:
-            declared[key] = decl
+        # Files sharing (projection recipe, taxi type, year-month, declared
+        # schema) share one scan, so every file is read with its own types.
+        groups[(ts, ttype, infer_month_from_path(f), pruned)].append(f)
 
     typed_ok = typed_place and all(
-        ts.place_mode == "location" for (ts, *_rest) in groups
+        ts.place_mode == "location"
+        and isinstance(pruned[ts.location_col].dataType, IntegralType)
+        for (ts, _t, _ym, pruned) in groups
     )
     parts: list[DataFrame] = []
-    for key, group_files in groups.items():
-        ts, ttype, ym = key[0], key[1], key[2]
-        decl = declared.get(key)
-        if decl is not None:
-            raw = spark.read.schema(decl).parquet(*group_files)
-        else:
-            raw = spark.read.parquet(*group_files)
-        dt_type = raw.schema[ts.datetime_col].dataType
+    for (ts, ttype, ym, pruned), group_files in groups.items():
+        raw = spark.read.schema(pruned).parquet(*group_files)
         if ts.place_mode == "location":
             loc = F.col(ts.location_col)
             place = loc if typed_ok else place_key(loc)
@@ -200,6 +243,7 @@ def normalize_trips(
         else:
             place = F.lit("")
         year, month = (ym if ym is not None else (None, None))
+        dt_type = pruned[ts.datetime_col].dataType
         parts.append(
             raw.select(
                 coerce_timestamp(F.col(ts.datetime_col), dt_type).alias("pickup_datetime"),

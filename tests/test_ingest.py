@@ -268,3 +268,137 @@ def test_sniff_fallback_groups_by_full_declared_schema(spark, tmp_path):
     rows = df.collect()
     assert len(rows) == 4
     assert {r.pickup_place for r in rows} == {"132", "7", "214", "88"}
+
+
+def _next_job_id(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _spark_dir(spark, base):
+    p = str(base / "yellow_tripdata_2023-01.parquet")
+    spark.createDataFrame(
+        [(datetime.datetime(2023, 1, 5, 7, 30), 132, 1.5)],
+        "tpep_pickup_datetime timestamp, PULocationID int, fare double",
+    ).coalesce(1).write.parquet(p)
+    return p
+
+
+def _arrow_nanos(spark, base):
+    import pandas as pd
+
+    p = str(base / "yellow_tripdata_2024-01.parquet")
+    pd.DataFrame(
+        {"tpep_pickup_datetime": pd.to_datetime([1_704_067_200_000_000_000]),
+         "PULocationID": [7]}
+    ).to_parquet(p, index=False)
+    return p
+
+
+def _string_datetimes(spark, base):
+    p = str(base / "yellow_tripdata_2009-03.parquet")
+    spark.createDataFrame(
+        [("2009-03-02 07:15:00", 40.7216, -73.9934)],
+        "Trip_Pickup_DateTime string, Start_Lat double, Start_Lon double",
+    ).coalesce(1).write.parquet(p)
+    return p
+
+
+def _case_duplicate(spark, base):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(base / "yellow_tripdata_2023-02.parquet")
+    pq.write_table(pa.table({"ts": [1], "Extra": [1], "extra": [2]}), p)
+    return p
+
+
+def _truncated(spark, base):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(base / "yellow_tripdata_2023-03.parquet")
+    pq.write_table(pa.table({"ts": list(range(1000))}), p)
+    with open(p, "r+b") as fh:
+        fh.truncate(fh.seek(0, 2) // 2)
+    return p
+
+
+@pytest.mark.parametrize(
+    "make",
+    [_spark_dir, _arrow_nanos, _string_datetimes, _case_duplicate, _truncated],
+)
+def test_footer_schema_matches_inference(spark, tmp_path, make):
+    """The driver-side footer reader returns exactly the schema Spark's
+    inference does, or fails wherever inference fails, and runs no job."""
+    from taxi_data_datapipeline_spark.sources.ingest import footer_schema
+
+    p = make(spark, tmp_path)
+
+    def outcome(read):
+        try:
+            return read()
+        except Exception:
+            return "fails"
+
+    want = outcome(lambda: spark.read.parquet(p).schema)
+    before = _next_job_id(spark)
+    got = outcome(lambda: footer_schema(spark, p))
+    assert _next_job_id(spark) == before
+    assert got == want
+
+
+def test_normalize_trips_submits_no_job(spark, trip_files):
+    """Footer reads, detection and every group's declared-schema scan are
+    planning only: not one Spark job before the caller's action."""
+    before = _next_job_id(spark)
+    trips, report = normalize_trips(spark, trip_files, typed_place=True)
+    trips.schema  # noqa: B018 - analysis only
+    assert _next_job_id(spark) == before
+    assert len(report.resolved) == 4
+
+
+def test_mixed_location_types_in_one_group_match_duckdb(spark, tmp_path):
+    """Two files of the same taxi type and month whose location columns are
+    int32 and int64 scan with their own footer types (an int64 id beyond
+    the int32 range survives), and the pivot counts match DuckDB's."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from taxi_data_datapipeline_spark.plans.pipeline import build_wide_plan
+
+    hour_us = 3_600_000_000
+    jan5 = 1_672_876_800_000_000  # 2023-01-05 00:00 UTC
+    p32 = str(tmp_path / "yellow_tripdata_2023-01.parquet")
+    p64 = str(tmp_path / "yellow_tripdata_2023-01b.parquet")
+    pq.write_table(pa.table({
+        "tpep_pickup_datetime": pa.array(
+            [jan5 + (i % 24) * hour_us for i in range(90)], pa.timestamp("us")),
+        "PULocationID": pa.array([132] * 60 + [7] * 30, pa.int32()),
+    }), p32)
+    pq.write_table(pa.table({
+        "tpep_pickup_datetime": pa.array(
+            [jan5 + (i % 5) * hour_us for i in range(80)], pa.timestamp("us")),
+        "PULocationID": pa.array([132] * 40 + [5_000_000_000] * 40, pa.int64()),
+    }), p64)
+
+    trips, report = normalize_trips(spark, [p32, p64], typed_place=True)
+    assert report.skipped == []
+    wide, _, _ = build_wide_plan(trips, min_rides=1, taxi_types=["yellow"])
+    hours = [f"hour_{h}" for h in range(24)]
+    got = sorted(
+        (r["date"], r["pickup_place"], *(r[h] for h in hours)) for r in wide.collect()
+    )
+    counts = ", ".join(
+        f"count(*) FILTER (WHERE hour(ts) = {h})" for h in range(24)
+    )
+    want = sorted(duckdb.sql(
+        f"""SELECT CAST(ts AS DATE), CAST(loc AS VARCHAR), {counts}
+        FROM (SELECT tpep_pickup_datetime AS ts, CAST(PULocationID AS BIGINT) AS loc
+              FROM read_parquet('{p32}')
+              UNION ALL
+              SELECT tpep_pickup_datetime, PULocationID FROM read_parquet('{p64}'))
+        GROUP BY ALL"""
+    ).fetchall())
+    assert got == want
+    assert {g[1] for g in got} == {"132", "7", "5000000000"}

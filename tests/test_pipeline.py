@@ -288,3 +288,29 @@ def test_run_schema_check_warns_on_undetectable_file(spark, tmp_path):
     msgs = [str(w.message) for w in caught]
     assert any("no pickup-datetime column" in m and bad_path in m for m in msgs)
     assert not any(good_path in m for m in msgs)  # advisory only for bad
+
+
+def test_metadata_phase_submits_no_job(spark, taxi_dir):
+    """Discovery, the schema pre-flight, ingest and the pivot plan are all
+    driver-side planning: the pipeline's only jobs are its write's. Footers
+    are read once and shared, as ``run_pivot_pipeline`` does."""
+    from taxi_data_datapipeline_spark.plans.pipeline import (
+        build_wide_plan,
+        run_schema_check,
+    )
+    from taxi_data_datapipeline_spark.sources.ingest import (
+        footer_schemas,
+        normalize_trips,
+    )
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    cfg = PipelineConfig(input_path=taxi_dir, output_path="/dev/null", name_filter="tripdata")
+    files = select_input_files(cfg)
+    footers = footer_schemas(spark, files)
+    checked = run_schema_check(spark, files, footers=footers)
+    trips, report = normalize_trips(spark, files, typed_place=True, footers=footers)
+    wide, _, _ = build_wide_plan(trips, 50, taxi_types=["green", "yellow"])
+    wide.schema  # noqa: B018 - analysis only
+    assert scheduler.nextJobId() == before
+    assert all(checked.values()) and len(report.resolved) == 2
